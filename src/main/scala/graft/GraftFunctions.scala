@@ -1,40 +1,24 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.call_function
 
 import graft.audit.{ArrayBucket, ArrayFloorSearch}
 import graft.text.{MinHashSig, WordShingles}
 import graft.vector.{CosineSimilarity, Deflate6, Dot612, FromScaled18, FromScaledN, FromScaledSplit, L2Squared, ScaleVec612, ToScaled18, ToScaledN, VecSumDec}
 
-/** Engine extension surface.
-  *
-  * `GraftExtensions` registers the engine's native Catalyst expressions at
-  * session build time (`SparkSession.builder().withExtensions(...)`);
-  * `GraftFunctions.ensureRegistered` does the same imperatively for
-  * sessions the engine does not construct (the driver's), so every
-  * operator works in any session handed to it.
+/** The engine's native Catalyst expressions, by SQL name, and their
+  * Column-API forms. [[GraftSession.prepare]] registers them in a session.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptions.foreach(e.injectFunction)
-    e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
-    e.injectOptimizerRule(_ => graft.plans.AsOfRangePushdown)
-  }
-}
-
 object GraftFunctions {
 
   type Builder = Seq[Expression] => Expression
 
-  val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
-    (FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
+  val descriptions: Seq[(String, Builder)] = Seq(
+    ("graft_cosine",
       ((exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
+    ("graft_shingles",
       ((exprs: Seq[Expression]) => {
         // validate here: builder failures surface as raw internal
         // exceptions at resolution, so name the function and the rule
@@ -51,50 +35,35 @@ object GraftFunctions {
             s"graft_shingles: n must be a literal integer, got $other")
         })
       }): Builder),
-    (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
+    ("graft_minhash_sig",
       ((exprs: Seq[Expression]) => MinHashSig(exprs(0))): Builder),
-    (FunctionIdentifier("graft_floor_search"),
-      new ExpressionInfo(classOf[ArrayFloorSearch].getName, "graft_floor_search"),
+    ("graft_floor_search",
       ((exprs: Seq[Expression]) => ArrayFloorSearch(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2Squared].getName, "graft_l2sq"),
+    ("graft_l2sq",
       ((exprs: Seq[Expression]) => L2Squared(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_array_bucket"),
-      new ExpressionInfo(classOf[ArrayBucket].getName, "graft_array_bucket"),
+    ("graft_array_bucket",
       ((exprs: Seq[Expression]) => ArrayBucket(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_vec_sum"),
-      new ExpressionInfo(classOf[VecSumDec].getName, "graft_vec_sum"),
+    ("graft_vec_sum",
       ((exprs: Seq[Expression]) => VecSumDec(exprs(0))): Builder),
-    (FunctionIdentifier("graft_dot612"),
-      new ExpressionInfo(classOf[Dot612].getName, "graft_dot612"),
+    ("graft_dot612",
       ((exprs: Seq[Expression]) => Dot612(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_scalevec612"),
-      new ExpressionInfo(classOf[ScaleVec612].getName, "graft_scalevec612"),
+    ("graft_scalevec612",
       ((exprs: Seq[Expression]) => ScaleVec612(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_deflate6"),
-      new ExpressionInfo(classOf[Deflate6].getName, "graft_deflate6"),
+    ("graft_deflate6",
       ((exprs: Seq[Expression]) => Deflate6(exprs(0), exprs(1), exprs(2))): Builder),
-    (FunctionIdentifier("graft_to_scaled18"),
-      new ExpressionInfo(classOf[ToScaled18].getName, "graft_to_scaled18"),
+    ("graft_to_scaled18",
       ((exprs: Seq[Expression]) => ToScaled18(exprs(0))): Builder),
-    (FunctionIdentifier("graft_from_scaled18"),
-      new ExpressionInfo(classOf[FromScaled18].getName, "graft_from_scaled18"),
+    ("graft_from_scaled18",
       ((exprs: Seq[Expression]) => FromScaled18(exprs(0))): Builder),
-    (FunctionIdentifier("graft_to_scaled2"),
-      new ExpressionInfo(classOf[ToScaledN].getName, "graft_to_scaled2"),
+    ("graft_to_scaled2",
       ((exprs: Seq[Expression]) => ToScaledN(exprs(0), 2)): Builder),
-    (FunctionIdentifier("graft_from_scaled2"),
-      new ExpressionInfo(classOf[FromScaledN].getName, "graft_from_scaled2"),
+    ("graft_from_scaled2",
       ((exprs: Seq[Expression]) => FromScaledN(exprs(0), 2)): Builder),
-    (FunctionIdentifier("graft_viterbi"),
-      new ExpressionInfo(classOf[graft.text.ViterbiSegment].getName, "graft_viterbi"),
+    ("graft_viterbi",
       ((exprs: Seq[Expression]) => graft.text.ViterbiSegment(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_from_scaled4_split"),
-      new ExpressionInfo(classOf[FromScaledSplit].getName, "graft_from_scaled4_split"),
+    ("graft_from_scaled4_split",
       ((exprs: Seq[Expression]) => FromScaledSplit(exprs(0), exprs(1), 4)): Builder),
-    (FunctionIdentifier("graft_gram_stats"),
-      new ExpressionInfo(classOf[graft.text.GramStats].getName, "graft_gram_stats"),
+    ("graft_gram_stats",
       ((exprs: Seq[Expression]) => {
         if (exprs.length != 2)
           throw new IllegalArgumentException(
@@ -109,21 +78,6 @@ object GraftFunctions {
             s"graft_gram_stats: n must be a literal integer, got $other")
         })
       }): Builder))
-
-  /** Idempotent runtime registration for externally-built sessions. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    descriptions.foreach { case (ident, info, builder) =>
-      classic.sessionState.functionRegistry
-        .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
-    }
-    if (!classic.experimental.extraStrategies.contains(graft.plans.AsOfStrategy))
-      classic.experimental.extraStrategies =
-        classic.experimental.extraStrategies :+ graft.plans.AsOfStrategy
-    if (!classic.experimental.extraOptimizations.contains(graft.plans.AsOfRangePushdown))
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ graft.plans.AsOfRangePushdown
-  }
 
   /** Column-API form of the native cosine expression. */
   def graftCosine(a: Column, b: Column): Column =

@@ -1,15 +1,56 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** Central session construction: one place for the engine's scale tunables.
+import graft.plans.{AsOfRangePushdown, AsOfStrategy}
+
+/** The one module that knows how a session is made ready for graft.
   *
-  * local[N] here; on a cluster the same settings apply per-executor. AQE
-  * handles runtime re-planning (partition coalescing, skew-join splitting),
-  * which is the scale path for the audit feed's hot entities and for
-  * dedup blocks of uneven size.
+  * [[build]] constructs the engine's own session: local[N] here; on a
+  * cluster the same settings apply per-executor. AQE handles runtime
+  * re-planning (partition coalescing, skew-join splitting), which is the
+  * scale path for the audit feed's hot entities and for dedup blocks of
+  * uneven size.
+  *
+  * [[prepare]] makes any session ready — one graft built, or one handed
+  * in by a caller (the driver's session, `getOrCreate` returning an
+  * existing one). Operators never touch session state themselves, so an
+  * op sees the same posture whichever op ran before it.
   */
 object GraftSession {
+
+  /** The pinned session posture.
+    *   - ANSI mode ON (Spark 4's default, pinned so a deployment default
+    *     cannot flip arithmetic semantics under the oracle hashes):
+    *     overflow, division by zero and invalid casts raise instead of
+    *     wrapping or yielding NULL.
+    *   - Parquet TIMESTAMP(NANOS) columns read as raw LONG epoch nanos,
+    *     which Spark's vectorized reader otherwise rejects;
+    *     [[graft.sources.FeedSources.normalize]] truncates them to the
+    *     engine's native micros. */
+  private val posture: Seq[(String, String)] = Seq(
+    "spark.sql.ansi.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Idempotent: registers each [[GraftFunctions.descriptions]] function
+    * the session lacks, adds the AS-OF planner strategy and range-pushdown
+    * rule once each, and sets the posture. */
+  def prepare(spark: SparkSession): Unit = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val registry = classic.sessionState.functionRegistry
+    GraftFunctions.descriptions.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+    val x = classic.experimental
+    if (!x.extraStrategies.contains(AsOfStrategy))
+      x.extraStrategies = x.extraStrategies :+ AsOfStrategy
+    if (!x.extraOptimizations.contains(AsOfRangePushdown))
+      x.extraOptimizations = x.extraOptimizations :+ AsOfRangePushdown
+    posture.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   def build(appName: String, cpus: String): SparkSession = {
     // shuffle partitions default to the core count (local mode: one
     // healthy partition per core; AQE coalesces below that). The env
@@ -38,7 +79,6 @@ object GraftSession {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -50,6 +90,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    prepare(s)
     s
   }
 }

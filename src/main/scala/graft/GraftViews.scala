@@ -31,10 +31,12 @@ object GraftViews {
     * names. `table` plays the role of the reference's audited table name
     * in `<table>_<view>`. */
   def register(spark: SparkSession, feedDir: String,
-      table: String = "events"): Seq[String] =
+      table: String = "events"): Seq[String] = {
+    GraftSession.prepare(spark)
     auditSurface.map { case (suffix, q) =>
       val name = s"${table}_$suffix"
       q.fn(spark, feedDir).createOrReplaceTempView(name)
       name
     }
+  }
 }

@@ -24,12 +24,17 @@ object SparkEntry {
       graft.multimodal.Multimodal.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    GraftSession.prepare(spark)
     analytics.Relational.q1Pricing.fn(spark, "/root/testdata/sf0.001")
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. The session is
+    * the caller's, so each entry prepares it first (idempotent). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.fn).toMap
+    registry.map { q =>
+      q.name -> { (s: SparkSession, d: String) => GraftSession.prepare(s); q.fn(s, d) }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

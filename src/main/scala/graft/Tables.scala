@@ -23,16 +23,17 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = apply(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")
-  /** events.ts in the driver's data is parquet TIMESTAMP(NANOS), which
-    * Spark's vectorized reader rejects; read it as raw long nanos and
-    * truncate to microseconds (the engine's native timestamp precision).
-    * Integer division — a double round-trip would lose precision above
-    * 2^53 ns. Re-materialized feeds (e.g. the gen_scale.py sf1 replica)
-    * carry ts already at micros; accept both encodings. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** events.ts comes in one of two parquet encodings, both normalized to
+    * the engine's instant-micros TIMESTAMP by FeedSources.normalize:
+    *   - INT64 TIMESTAMP(MICROS, not UTC-adjusted), which Spark reads as
+    *     TIMESTAMP_NTZ — the sf0.001/0.01/0.1 test datasets (TESTDATA.md)
+    *     and the gen_scale.py replicas;
+    *   - INT64 TIMESTAMP(NANOS), which Spark's vectorized reader rejects;
+    *     the session posture (GraftSession.prepare) reads it as raw long
+    *     nanos, truncated to micros by integer division (a double
+    *     round-trip would lose precision above 2^53 ns). */
+  def events(s: SparkSession, d: String): DataFrame =
     graft.sources.FeedSources.normalize(apply(s, d, "events"))
-  }
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

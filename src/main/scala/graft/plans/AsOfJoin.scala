@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions.col
   *    linear pass per partition — no window state, no union blow-up, and
   *    the natural shape for a 1000-executor sort-merge at 100 TB.
   *
-  * The strategy is injected via GraftExtensions; AsOfSpec asserts both
-  * implementations agree row-for-row.
+  * GraftSession.prepare adds the strategy to the session; AsOfSpec
+  * asserts both implementations agree row-for-row.
   */
 /** @param tolerance max allowed `leftTime - rightTime`, in the time
   *                  column's native internal unit (microseconds for

@@ -20,7 +20,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     right rows past the bound can never match. Lower bounds must NOT be
   *     copied — an arbitrarily old right row can still be the match.
   *
-  * Injected via GraftExtensions (`injectOptimizerRule`). The reference has
+  * GraftSession.prepare adds it to the session's optimizer. The reference has
   * no equivalent: Postgres re-scopes its lateral audit scans per row
   * (audit.go:1074); this is planning-time work done once.
   */

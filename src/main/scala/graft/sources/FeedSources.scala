@@ -50,14 +50,12 @@ object FeedSources {
     * a TIMESTAMP-encoded file (or vice versa) mis-reads. One batch footer
     * peek decides. */
   def feedSchemaFor(spark: SparkSession, dir: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val actual = spark.read.option("pathGlobFilter", "events.parquet")
       .parquet(dir).schema("ts").dataType
     StructType(feedSchema.map(f => if (f.name == "ts") f.copy(dataType = actual) else f))
   }
 
   def parquetFeed(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // parquet is self-describing: honor the file's ts encoding and let
     // normalize converge it (a forced LongType over a TIMESTAMP file
     // mis-reads)

@@ -54,7 +54,6 @@ object EventStream {
     * canonical ones (FeedSources / AuditModel) — the streaming and batch
     * paths must never desynchronize. */
   def readFeed(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // file streaming sources need a directory; narrow to the feed file.
     // Schema matches the file's actual ts encoding (nanos-long vs micros
     // timestamp) — normalize converges both to instant-micros.
@@ -70,9 +69,11 @@ object EventStream {
     * (asserted in StreamingWindowSpec). State is bounded by the watermark
     * horizon, never by stream length. */
   def windowedRollup(feed: DataFrame): DataFrame =
-    feed
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("operation"))
+    rollup(feed.withWatermark("ts", "30 minutes"))
+
+  /** The 10-minute change rollup shared by the streaming and batch twins. */
+  private def rollup(df: DataFrame): DataFrame =
+    df.groupBy(window(col("ts"), "10 minutes"), col("operation"))
       .agg(count(lit(1)).as("n"), Det.dsumRound(col("value"), 2).as("total_value"))
       .select(
         date_format(col("window.start"), TS).as("win_start"),
@@ -93,12 +94,7 @@ object EventStream {
        |ORDER BY win_start, operation""".stripMargin) { (s, d) =>
     val tmp = graft.Scratch.dir("graft-audit-stream-")
     captureToAuditSink(s, d, s"$tmp/sink", s"$tmp/ckpt")
-    graft.sources.FeedSources.exactlyOnceView(s, s"$tmp/sink")
-      .groupBy(window(col("ts"), "10 minutes"), col("operation"))
-      .agg(count(lit(1)).as("n"), Det.dsumRound(col("value"), 2).as("total_value"))
-      .select(
-        date_format(col("window.start"), TS).as("win_start"),
-        col("operation"), col("n"), col("total_value"))
+    rollup(graft.sources.FeedSources.exactlyOnceView(s, s"$tmp/sink"))
       .orderBy("win_start", "operation")
   }
 
@@ -419,7 +415,6 @@ object EventStream {
     // same collapsed scale twin as the batch op — the streaming replay
     // must land on identical verdicts at every scale the gate runs
     graft.text.TextOps.dedupIncremental.scaleOracle.get) { (s, d) =>
-    graft.GraftFunctions.ensureRegistered(s)
     val tmp = graft.Scratch.dir("graft-sdi-")
     // the maintained dedup state is the COLLAPSED signature-group index
     // (one row per distinct signature with multiplicity + min id, see
@@ -585,7 +580,6 @@ object EventStream {
   val streamAsofEnrich: Q = Q(
     "stream_asof_enrich",
     { (s: SparkSession, d: String) =>
-      graft.GraftFunctions.ensureRegistered(s)
       val tmp = graft.Scratch.dir("graft-asof-stream-")
       val sink = s"$tmp/sink"
       val purchases = graft.audit.AuditQueries.log(s, d)

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Tables.{documents => docs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,11 +20,6 @@ import org.apache.spark.sql.expressions.Window
   * shuffle must not change a score), ranks order by (value, id).
   */
 object Retrieval {
-
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s) // graft_shingles in any session
-    Tables.documents(s, d)
-  }
 
   // --------------------------------------------------------- chunking --
 
@@ -1111,7 +1107,6 @@ object Retrieval {
          |SELECT query_id, rnk, doc_id, phrase_tf, score FROM r
          |WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.GraftFunctions.ensureRegistered(s)
       val pq = phraseQueries.toDF("query_id", "phrase", "plen")
       val w = docs(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("ws"))

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Tables.{documents => docs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,11 +20,6 @@ import org.apache.spark.sql.expressions.Window
   * join shuffle-partitions cleanly; nothing here is O(n²) over the corpus.
   */
 object TextOps {
-
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s) // graft_shingles in any session
-    Tables.documents(s, d)
-  }
 
   // ------------------------------------------------------------ exact --
 

@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.{Det, GraftFunctions, Q, Tables}
+import graft.Tables.{embeddings => emb}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,11 +20,6 @@ import org.apache.spark.sql.expressions.Window
   * (by neighbor id) sees identical values in both engines.
   */
 object Similarity {
-
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.ensureRegistered(s)
-    Tables.embeddings(s, d)
-  }
 
   private def cosR(a: Column, b: Column): Column =
     round(GraftFunctions.graftCosine(a, b), 4)

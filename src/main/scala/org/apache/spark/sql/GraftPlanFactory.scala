@@ -15,7 +15,7 @@ object GraftPlanFactory {
 
   /** Wraps a raw Catalyst expression as a public Column — lets library
     * code use graft's native expressions without requiring the session's
-    * function registry (ensureRegistered) first. */
+    * function registry (GraftSession.prepare) first. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 

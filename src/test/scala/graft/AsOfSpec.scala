@@ -19,7 +19,6 @@ class AsOfSpec extends AnyFunSuite {
   ).toDF("rk", "rt", "v")
 
   test("basic semantics: latest right with time <= left time, else null") {
-    GraftFunctions.ensureRegistered(spark)
     val got = AsOf.join(left, right, ("k", "rk"), ("t", "rt"))
       .select("id", "v").orderBy("id")
       .collect().map(r => (r.getLong(0), Option(r.getString(1))))
@@ -31,7 +30,6 @@ class AsOfSpec extends AnyFunSuite {
   }
 
   test("tolerance: matches older than the bound become NULL, not next-older") {
-    GraftFunctions.ensureRegistered(spark)
     val got = AsOf.join(left, right, ("k", "rk"), ("t", "rt"), tolerance = Some(10L))
       .select("id", "v").orderBy("id")
       .collect().map(r => (r.getLong(0), Option(r.getString(1))))
@@ -43,7 +41,6 @@ class AsOfSpec extends AnyFunSuite {
   }
 
   test("plans through AsOfJoinExec") {
-    GraftFunctions.ensureRegistered(spark)
     val df = AsOf.join(left, right, ("k", "rk"), ("t", "rt"))
     df.collect()
     // AQE wraps the physical plan; match on the rendered tree instead
@@ -52,7 +49,6 @@ class AsOfSpec extends AnyFunSuite {
   }
 
   test("NULL keys/times never match and never crash") {
-    GraftFunctions.ensureRegistered(spark)
     val l = Seq((1L, Option(1L), Option(10L)), (2L, Option.empty[Long], Option(5L)),
       (3L, Option(1L), Option.empty[Long])).toDF("id", "k", "t")
     val r = Seq((Option(1L), Option(5L), "a"), (Option.empty[Long], Option(1L), "x"),
@@ -66,7 +62,6 @@ class AsOfSpec extends AnyFunSuite {
   }
 
   test("short documents produce empty shingle sets, not a crash") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq("one two", "a b c d e").toDF("text")
       .select(split(col("text"), " ").as("ws"))
       .select(expr(graft.text.TextOps.shingleExpr("ws")).as("s3"))
@@ -75,7 +70,6 @@ class AsOfSpec extends AnyFunSuite {
   }
 
   test("AsOfRangePushdown pushes a post-join time bound into both scans") {
-    GraftFunctions.ensureRegistered(spark)
     val base = graft.audit.AuditQueries.log(spark, TestSession.sfDir)
     val l = base.filter(col("event_type") === "error")
       .select("audit_id", "entity_id", "ts")
@@ -99,7 +93,6 @@ class AsOfSpec extends AnyFunSuite {
   }
 
   test("custom operator and union-window composition agree on real data") {
-    GraftFunctions.ensureRegistered(spark)
     val base = graft.audit.AuditQueries.log(spark, TestSession.sfDir)
     val l = base.filter(col("event_type") === "error")
       .select("audit_id", "entity_id", "ts")

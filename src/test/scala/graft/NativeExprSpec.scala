@@ -13,10 +13,7 @@ class NativeExprSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
 
-  private def registered() = GraftFunctions.ensureRegistered(spark)
-
   test("floor_search matches array_max(filter(...)) on driven cases") {
-    registered()
     val arr = Seq(10L, 20L, 30L, 40L)
     val probes = Seq(5L, 10L, 15L, 39L, 40L, 99L)
     val df = probes.toDF("v")
@@ -31,7 +28,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("floor_search: empty array returns NULL; interpreted eval agrees") {
-    registered()
     val r = Seq(7L).toDF("v")
       .withColumn("ts", typedLit(Seq.empty[Long]))
       .selectExpr("graft_floor_search(ts, v)").head()
@@ -51,7 +47,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("l2sq is bit-identical to the zip_with/aggregate HOF on real embeddings") {
-    registered()
     val e = Tables.embeddings(spark, sfDir)
       .select(expr("transform(embedding, x -> cast(x as double))").as("a"))
     val pairs = e.limit(50).crossJoin(
@@ -65,7 +60,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("both expressions survive codegen (no interpreted fallback in plan)") {
-    registered()
     // spark.range + id-dependent inputs: a plain local Seq would be
     // constant-folded into a LocalTableScan and never exercise codegen
     val df = spark.range(1)
@@ -82,7 +76,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("dot612 equals the exact-decimal product fold, incl. negatives and ties") {
-    registered()
     // values exact at scale 6; includes a HALF_UP tie case: 0.5 * 0.000001
     // = 5e-7, whose scale-6 round is 0.000001 only under half-up
     val a = Seq(0.5, -1.25, 3.141593, 0.000001, -0.000001, 123.456789)
@@ -104,7 +97,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("dot612 overflows loudly on corpus-magnitude inputs; the Pca q fold does not") {
-    registered()
     // |v| = 4000 > ~3034: a single scale-12 term exceeds Long.MaxValue.
     // The kernel's contract is per-row scale-6 vectors of bounded
     // magnitude — corpus-scale matrix-vector sums (Pca's y) must use the
@@ -126,7 +118,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scalevec612 + vec_sum equals the transform/cast feed") {
-    registered()
     val df = Tables.embeddings(spark, sfDir).limit(200)
       .select(expr("transform(embedding, x -> round(cast(x as double), 6))").as("v"),
         expr("round(cast(embedding[0] as double), 6)").as("s"))
@@ -141,7 +132,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("deflate6 equals the decimal zip_with deflation, HALF_UP at scale 6") {
-    registered()
     val c = Seq(1.5, -2.25, 0.000003, 7.999999)
     val pv = Seq(0.5, 0.5, 0.5, -0.125)
     val s = 0.000001 // s*p = 5e-7 and -1.25e-7: exercises both tie and truncate
@@ -158,7 +148,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("fixed-point trio survives codegen and interpreted eval agrees") {
-    registered()
     val df = Tables.embeddings(spark, sfDir).limit(50)
       .select(expr("transform(embedding, x -> round(cast(x as double), 6))").as("v"))
       .withColumn("d", expr("graft_dot612(v, v)"))
@@ -174,7 +163,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scaled18 lane ≡ DECIMAL(38,18) pipeline bit-for-bit (per value and summed)") {
-    registered()
     // rank-mass-shaped doubles plus adversarial cases: HALF_UP ties at
     // scale 18 (±5e-19), subnormal-ish tinies, values near 1, and exact
     // dyadics whose decimal expansion exceeds 18 places (2^-60)
@@ -214,7 +202,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scaled18 overflows loudly past long capacity; pagerank mass never reaches it") {
-    registered()
     // |x| >= 9.223372036854775808 cannot carry at scale 18 in a long —
     // the contract is bounded mass (PageRank: every group sum <= 1); a
     // violation must throw, not wrap
@@ -229,7 +216,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_viterbi ≡ the interpreted HOF fold on a real vocab (incl. ties)") {
-    registered()
     // a small piece table with DELIBERATE cost ties so the (cost, n, seg)
     // tie-break order is exercised, not just the happy path: 'ab' and
     // 'ba' tie at 2.0; chars tie pairwise; 'abab' forces the n tie-break
@@ -269,7 +255,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scaled2 + split-4 moment lanes ≡ exact DECIMAL pipeline bit-for-bit") {
-    registered()
     // 2-decimal monetary shapes (the q_measure_correlations inputs):
     // column extremes plus 500 random price×quantity-ish pairs
     val rnd = new scala.util.Random(13)
@@ -317,7 +302,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("correlations capacity guard fails LOUDLY past the lane budget (ANSI is off)") {
-    registered()
     // In-contract inputs pass and produce the normal 6-pair output
     val ok = Seq(
       (1.0, 949.13, 0.05, 0.02), (50.0, 104999.91, 0.1, 0.08),
@@ -329,8 +313,8 @@ class NativeExprSpec extends AnyFunSuite {
     // Past the budget the op must FAIL LOUDLY, never wrap: max|price|
     // here is 6e10 → scale-2 unscaled 6e12 → per-row product 3.6e25 >>
     // 9.2e18 (and n·worst-addend also blows). Two independent loud
-    // paths: ANSI (ON by default in Spark 4 — the session default, so
-    // the per-row multiply itself throws ARITHMETIC_OVERFLOW), and the
+    // paths: ANSI (pinned ON by GraftSession.prepare, so the per-row
+    // multiply itself throws ARITHMETIC_OVERFLOW), and the
     // op's own max|x|-witness guard, which still fires if a deployment
     // disables ANSI (where multiply and sum(long) wrap SILENTLY).
     val big = Seq(
@@ -346,7 +330,7 @@ class NativeExprSpec extends AnyFunSuite {
       || m.contains("ARITHMETIC_OVERFLOW") || m.contains("long overflow")),
       errAnsi.toString)
     // defense-in-depth leg: with ANSI off nothing else is loud — the
-    // guard must be
+    // guard must be the loud path
     val ansiKey = "spark.sql.ansi.enabled"
     val prevAnsi = spark.conf.get(ansiKey)
     try {
@@ -360,7 +344,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_gram_stats ≡ the sorted-run HOF fold and the explode aggregation") {
-    registered()
     // the interpreted fold graft_gram_stats replaced in doc_repetition_topn
     def foldStats(n: Int): String =
       s"""named_struct('tot', cast(size(graft_shingles(ws, $n)) as bigint),

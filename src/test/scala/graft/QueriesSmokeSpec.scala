@@ -14,6 +14,7 @@ object TestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftSession.prepare(s)
     s
   }
   val sfDir = "/root/testdata/sf0.001"

@@ -25,7 +25,6 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("dedup_incremental: verdicts match a direct cross-split band probe") {
-    GraftFunctions.ensureRegistered(spark)
     // independent band table straight off the (already spec-verified)
     // native signature expression — no shared helper with the op's plan
     val sigs = Tables.documents(spark, sfDir)
@@ -102,7 +101,6 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("dedup_lsh_curve: buckets match a driver-side replica; theory curve exact") {
-    GraftFunctions.ensureRegistered(spark)
     import java.math.{BigDecimal => JBD, RoundingMode}
     def r4(n: Long, d: Long): Double =
       JBD.valueOf(1.0 * n / d).setScale(4, RoundingMode.HALF_UP).doubleValue
